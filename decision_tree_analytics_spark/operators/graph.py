@@ -37,15 +37,19 @@ def _ckpt1(df: DataFrame) -> DataFrame:
     """Eager SINGLE-PARTITION checkpoint whose SinglePartition stays
     visible to consumers.  The contracted graph state is ≤n² ≤625
     rows at ANY corpus scale, and SinglePartition satisfies every
-    downstream join/groupBy clustering, so loop rounds over these
-    tables plan with ZERO exchanges (one single-task stage per
-    round).  The trailing coalesce(1) is load-bearing: when the
-    checkpointed plan contains an exchange it is AQE-wrapped, and
-    Dataset.localCheckpoint then returns an ExistingRDD with UNKNOWN
-    partitioning — consumers would re-shuffle the KB-scale table to
-    spark.sql.shuffle.partitions micro-tasks.  Coalescing the
-    1-partition RDD is a free narrow op that re-establishes the
-    partitioning property."""
+    downstream join/groupBy clustering, so the early loop rounds over
+    these tables plan without an exchange (one single-task stage per
+    round).  Deep rounds still re-shuffle: the checkpoint's size
+    ESTIMATE compounds through the self-joins and crosses
+    spark.sql.maxSinglePartitionBytes by round 2, so those rounds
+    keep KB-scale AQE-coalesced exchanges (OPTIMIZATION_r15.md,
+    "maxSinglePartitionBytes finding").  The trailing coalesce(1) is
+    load-bearing: when the checkpointed plan contains an exchange it
+    is AQE-wrapped, and Dataset.localCheckpoint then returns an
+    ExistingRDD with UNKNOWN partitioning — consumers would re-shuffle
+    the KB-scale table to spark.sql.shuffle.partitions micro-tasks.
+    Coalescing the 1-partition RDD is a free narrow op that
+    re-establishes the partitioning property."""
     return df.coalesce(1).localCheckpoint().coalesce(1)
 
 
@@ -707,8 +711,9 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Single partition (_ckpt1): the bottleneck matrix is ≤n² ≤625
     # rows at ANY corpus scale (contract-then-solve), and a visible
     # SinglePartition on both self-join sides satisfies the join and
-    # the groupBy clustering, so each squaring plans with ZERO
-    # exchanges and runs as one single-task job.
+    # the groupBy clustering, so the early squarings plan without an
+    # exchange and run as one single-task job; deeper squarings keep
+    # KB-scale AQE exchanges (see _ckpt1).
     m = _ckpt1(bd.unionByName(self_loops))
     for _ in range(MST_SQUARINGS):
         l = m.select(F.col("src").alias("ls"), F.col("dst").alias("mid"), F.col("cd").alias("lc"))
@@ -920,9 +925,10 @@ def graph_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager checkpoint job otherwise re-derives it from the persisted
     # fact edges (mean-weight scalar broadcast + distinct exchange,
     # re-paid BC_ROUNDS times).  With sym and the BFS state both on a
-    # visible single partition (_ckpt1), every round — frontier join,
-    # count aggregate, first-reached anti-join, union — plans with
-    # ZERO exchanges and runs as one single-task job.
+    # visible single partition (_ckpt1), the early rounds — frontier
+    # join, count aggregate, first-reached anti-join, union — plan
+    # without an exchange and run as one single-task job; deeper
+    # rounds keep KB-scale AQE exchanges (see _ckpt1).
     sym = _ckpt1(
         und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
             und.select(F.col("b").alias("u"), F.col("a").alias("v"))

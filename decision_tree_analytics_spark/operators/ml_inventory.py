@@ -1346,7 +1346,7 @@ def ml_gbt_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is also computed ONCE as a named column (sc_t) — the inline form
     # re-expanded the score tree 3×|cands|+|cands| times per round and
     # re-analysis of that nested tree was most of the remaining build.
-    r6s = lambda s: f"floor(({s}) * 1e6 + 0.5) / 1e6"  # noqa: E731
+    r6s = lambda s: f"floor(({s}) * 1e6 + 0.5D) / 1e6"  # noqa: E731
     state = li.agg(F.expr(r6s("avg(y)")).alias("f0"))
 
     def fhat_sql(m: int) -> str:

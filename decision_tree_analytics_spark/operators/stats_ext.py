@@ -3015,6 +3015,349 @@ FROM scored s JOIN stop t ON s.arm = t.arm AND s.day = t.stop_day
 
 
 # ------------------------------------------------------------------
+# ml_quantile_reg — pinball-loss quantile regression over a fixed grid
+# ------------------------------------------------------------------
+
+QREG_INTERCEPTS = [0, 2500, 5000, 7500, 10000]  # cents
+QREG_SLOPES = [-200, -100, 0, 100, 200]  # cents per hour-of-day
+QREG_COMBOS = [(a, b) for a in QREG_INTERCEPTS for b in QREG_SLOPES]
+# q = 0.9, losses scaled x10 so both branches stay integer:
+# loss10 = 9*(y - yhat) if y > yhat else (yhat - y).
+
+
+def ml_quantile_reg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quantile regression (q = 0.9) of event value on hour-of-day
+    via exact pinball-loss grid search — the tail-latency/tail-spend
+    modeling pass mean-OLS (rel_rolling_ols, ml_ridge_normal_eq)
+    cannot do.  Every (intercept, slope) candidate's total pinball
+    loss is ONE conditional aggregate, so the whole 25-point grid is
+    a single corpus pass producing 25 columns on the |event_type|
+    grid, then a stack + rank picks the argmin — the
+    ml_threshold_tuning shape: grid-size WINDOW rows, never
+    grid-size corpus scans (and never a 25x explode of the fact
+    table).
+
+    Determinism: y is rule-3 integer cents, yhat = a + b*h is a
+    BIGINT literal expression, both CASE branches are non-negative
+    BIGINTs, and there is NO division anywhere; the argmin rank
+    breaks ties (loss10, a, b) — unique by construction (rule 5).
+    Sums stay under 2^63 until ~2e13 rows per event_type (9 *
+    max-cent-residual ~= 4.5e5 per row).  Scale: map-side-combinable
+    single pass; the window runs on |event_type| x 25 rows."""
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("value").isNotNull()
+    )
+    base = ev.select(
+        "event_type",
+        F.floor(F.col("value") * 100 + F.lit(0.5)).alias("y"),
+        F.expr("((ts div 1000) div 3600000000) % 24").alias("h"),
+    )
+    sums = []
+    for i, (a, b) in enumerate(QREG_COMBOS):
+        yhat = F.lit(a) + F.lit(b) * F.col("h")
+        sums.append(
+            F.sum(
+                F.when(F.col("y") > yhat, 9 * (F.col("y") - yhat)).otherwise(
+                    yhat - F.col("y")
+                )
+            )
+            .cast("long")
+            .alias(f"l_{i}")
+        )
+    agg = base.groupBy("event_type").agg(*sums)
+    stack_args = ", ".join(
+        f"{a}L, {b}L, l_{i}" for i, (a, b) in enumerate(QREG_COMBOS)
+    )
+    grid = agg.selectExpr(
+        "event_type",
+        f"stack({len(QREG_COMBOS)}, {stack_args})"
+        " AS (intercept_cents, slope_cents, loss10)",
+    )
+    w = Window.partitionBy("event_type").orderBy(
+        "loss10", "intercept_cents", "slope_cents"
+    )
+    return (
+        grid.select("*", F.row_number().over(w).alias("rn"))
+        .filter(F.col("rn") == 1)
+        .select(
+            "event_type",
+            F.col("intercept_cents").cast("long").alias("intercept_cents"),
+            F.col("slope_cents").cast("long").alias("slope_cents"),
+            F.col("loss10").cast("long").alias("loss10"),
+        )
+    )
+
+
+def _qreg_oracle() -> str:
+    sums = ",\n    ".join(
+        f"CAST(sum(CASE WHEN y > {a} + {b} * h"
+        f" THEN 9 * (y - ({a} + {b} * h))"
+        f" ELSE ({a} + {b} * h) - y END) AS BIGINT) AS l_{i}"
+        for i, (a, b) in enumerate(QREG_COMBOS)
+    )
+    arms = "\n  UNION ALL ".join(
+        f"SELECT event_type, CAST({a} AS BIGINT) AS intercept_cents,"
+        f" CAST({b} AS BIGINT) AS slope_cents, l_{i} AS loss10 FROM agg"
+        for i, (a, b) in enumerate(QREG_COMBOS)
+    )
+    return f"""
+WITH base AS (SELECT event_type,
+    CAST(floor(value * 100 + 0.5) AS BIGINT) AS y,
+    (epoch_us(ts) // 3600000000) % 24 AS h
+  FROM events WHERE value IS NOT NULL),
+agg AS MATERIALIZED (SELECT event_type,
+    {sums}
+  FROM base GROUP BY 1),
+grid AS ({arms}),
+ranked AS (SELECT *,
+    row_number() OVER (PARTITION BY event_type
+      ORDER BY loss10, intercept_cents, slope_cents) AS rn
+  FROM grid)
+SELECT event_type, intercept_cents, slope_cents, loss10
+FROM ranked WHERE rn = 1
+"""
+
+
+QUERIES["ml_quantile_reg"] = ml_quantile_reg
+ORACLES["ml_quantile_reg"] = _qreg_oracle()
+
+
+# ------------------------------------------------------------------
+# rel_did — difference-in-differences readout
+# ------------------------------------------------------------------
+
+
+def rel_did(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Difference-in-differences — the quasi-experimental readout the
+    experimentation family (rel_ab_test, rel_cuped, ml_sprt_monitor)
+    still lacked: arms from the content-derived md5(user_id) % 2
+    split, pre/post periods split at the corpus's temporal midpoint
+    (computed IN-QUERY from min/max day so both engines derive the
+    same boundary from the same data — no wall-clock), and per event
+    type the four cell means plus the DiD estimate
+    (post_t − pre_t) − (post_c − pre_c).
+
+    Determinism: cell sums are rule-3 integer cents; means are
+    divided to micro-dollars via the sign-split idiom
+    sign(cents) * (abs(cents) * 10000 div n) — Spark div truncates
+    while DuckDB // floors on NEGATIVE numerators, so the division
+    only ever sees non-negative operands (the trend_ppm lesson;
+    BIGINT-safe until a cell's cent sum exceeds ~9.2e14 ≈ $9.2e12);
+    DiD subtracts the four already-floored means, so both engines
+    compute identical integers; empty cells nullif to NULL and
+    propagate identically (rule 8).  Scale: ONE corpus exchange — the
+    (event_type, arm, post) rollup is map-side-combinable; the
+    midpoint is a broadcast scalar aggregate; the pivot runs on the
+    20-cell grid."""
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("value").isNotNull()
+    )
+    rows = ev.select(
+        "event_type",
+        F.expr(
+            "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 8),"
+            " 16, 10) AS BIGINT) % 2"
+        ).alias("arm"),
+        F.expr("(ts div 1000) div 86400000000").alias("day"),
+        F.floor(F.col("value") * 100 + F.lit(0.5)).alias("cents"),
+    )
+    bounds = rows.agg(
+        F.min("day").alias("lo"), F.max("day").alias("hi")
+    ).select(F.expr("(lo + hi + 1) div 2").alias("split_day"))
+    cells = (
+        rows.crossJoin(F.broadcast(bounds))
+        .select(
+            "event_type",
+            "arm",
+            F.when(F.col("day") >= F.col("split_day"), 1)
+            .otherwise(0)
+            .alias("post"),
+            "cents",
+        )
+        .groupBy("event_type", "arm", "post")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("cents").cast("long").alias("cents"),
+        )
+        .select(
+            "event_type",
+            "arm",
+            "post",
+            "n",
+            F.expr(
+                "CAST((CASE WHEN cents < 0 THEN -1 ELSE 1 END)"
+                " * (abs(cents) * 10000 div nullif(n, 0)) AS BIGINT)"
+            ).alias("mean_micro"),
+        )
+    )
+
+    def cell(arm: int, post: int, col: str):
+        return F.max(
+            F.when((F.col("arm") == arm) & (F.col("post") == post), F.col(col))
+        )
+
+    out = cells.groupBy("event_type").agg(
+        cell(0, 0, "n").cast("long").alias("n_pre_ctrl"),
+        cell(1, 0, "n").cast("long").alias("n_pre_treat"),
+        cell(0, 1, "n").cast("long").alias("n_post_ctrl"),
+        cell(1, 1, "n").cast("long").alias("n_post_treat"),
+        cell(0, 0, "mean_micro").alias("pre_ctrl_micro"),
+        cell(1, 0, "mean_micro").alias("pre_treat_micro"),
+        cell(0, 1, "mean_micro").alias("post_ctrl_micro"),
+        cell(1, 1, "mean_micro").alias("post_treat_micro"),
+    )
+    return out.select(
+        "*",
+        (
+            (F.col("post_treat_micro") - F.col("pre_treat_micro"))
+            - (F.col("post_ctrl_micro") - F.col("pre_ctrl_micro"))
+        )
+        .cast("long")
+        .alias("did_micro"),
+    )
+
+
+QUERIES["rel_did"] = rel_did
+ORACLES["rel_did"] = """
+WITH rows_ AS (SELECT event_type,
+    ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 2
+      AS arm,
+    epoch_us(ts) // 86400000000 AS day,
+    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
+  FROM events WHERE value IS NOT NULL),
+bounds AS (SELECT (min(day) + max(day) + 1) // 2 AS split_day FROM rows_),
+cells AS (SELECT event_type, arm,
+    CASE WHEN day >= split_day THEN 1 ELSE 0 END AS post,
+    CAST(count(*) AS BIGINT) AS n,
+    CAST((CASE WHEN sum(cents) < 0 THEN -1 ELSE 1 END)
+         * (abs(sum(cents)) * 10000 // nullif(count(*), 0))
+      AS BIGINT) AS mean_micro
+  FROM rows_ CROSS JOIN bounds GROUP BY 1, 2, 3),
+piv AS (SELECT event_type,
+    CAST(max(CASE WHEN arm = 0 AND post = 0 THEN n END) AS BIGINT)
+      AS n_pre_ctrl,
+    CAST(max(CASE WHEN arm = 1 AND post = 0 THEN n END) AS BIGINT)
+      AS n_pre_treat,
+    CAST(max(CASE WHEN arm = 0 AND post = 1 THEN n END) AS BIGINT)
+      AS n_post_ctrl,
+    CAST(max(CASE WHEN arm = 1 AND post = 1 THEN n END) AS BIGINT)
+      AS n_post_treat,
+    max(CASE WHEN arm = 0 AND post = 0 THEN mean_micro END)
+      AS pre_ctrl_micro,
+    max(CASE WHEN arm = 1 AND post = 0 THEN mean_micro END)
+      AS pre_treat_micro,
+    max(CASE WHEN arm = 0 AND post = 1 THEN mean_micro END)
+      AS post_ctrl_micro,
+    max(CASE WHEN arm = 1 AND post = 1 THEN mean_micro END)
+      AS post_treat_micro
+  FROM cells GROUP BY 1)
+SELECT *,
+  CAST((post_treat_micro - pre_treat_micro)
+       - (post_ctrl_micro - pre_ctrl_micro) AS BIGINT) AS did_micro
+FROM piv
+"""
+
+
+# ------------------------------------------------------------------
+# rel_mann_kendall — non-parametric monotone-trend test
+# ------------------------------------------------------------------
+
+
+def rel_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mann-Kendall monotone-trend test per event type — the
+    distribution-free companion to rel_rolling_ols/rel_theil_sen:
+    S = sum over day pairs i<j of sign(x_j − x_i) on the daily
+    revenue series, with the x18-scaled null variance
+    n(n−1)(2n+5) (kept integer instead of dividing by 18) and a
+    normalized trend strength S/maxpairs in ppm.
+
+    Determinism: daily x is an exact BIGINT cent sum, so every sign
+    comparison is integer-exact; S can be NEGATIVE, and integer
+    division diverges on negatives (Spark div truncates, DuckDB //
+    floors) — the ppm is therefore computed as
+    sign(S) * (|S| * 1e6 div n_pairs), keeping every division
+    positive (the sum_len_delta lesson).  Scale: ONE corpus exchange
+    builds the per-(type, day) rollup; the pairwise self-join runs on
+    the bounded daily grid (~31 days x |event_type| rows at ANY
+    corpus size — a contracted table, so the quadratic stage is
+    metadata-sized; the join keys alias the grouped side per the r9
+    ambiguity gotcha)."""
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("value").isNotNull()
+    )
+    daily = (
+        ev.select(
+            "event_type",
+            F.expr("(ts div 1000) div 86400000000").alias("day"),
+            F.floor(F.col("value") * 100 + F.lit(0.5)).alias("cents"),
+        )
+        .groupBy("event_type", "day")
+        .agg(F.sum("cents").cast("long").alias("x"))
+    )
+    a = daily.select(
+        F.col("event_type").alias("et"),
+        F.col("day").alias("d1"),
+        F.col("x").alias("x1"),
+    )
+    b = daily.select(
+        F.col("event_type").alias("et"),
+        F.col("day").alias("d2"),
+        F.col("x").alias("x2"),
+    )
+    pairs = a.join(b, "et").filter(F.col("d1") < F.col("d2"))
+    agg = pairs.groupBy(F.col("et").alias("event_type")).agg(
+        F.count(F.lit(1)).cast("long").alias("n_pairs"),
+        F.sum(
+            F.when(F.col("x2") > F.col("x1"), 1)
+            .when(F.col("x2") < F.col("x1"), -1)
+            .otherwise(0)
+        )
+        .cast("long")
+        .alias("s_stat"),
+    )
+    days = daily.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("n_days")
+    )
+    return agg.join(days, "event_type").select(
+        "event_type",
+        "n_days",
+        "n_pairs",
+        "s_stat",
+        F.expr("n_days * (n_days - 1) * (2 * n_days + 5)")
+        .cast("long")
+        .alias("var18"),
+        (
+            F.when(F.col("s_stat") < 0, -1).otherwise(1)
+            * F.expr("CAST(abs(s_stat) * 1000000 div n_pairs AS BIGINT)")
+        )
+        .cast("long")
+        .alias("trend_ppm"),
+    )
+
+
+QUERIES["rel_mann_kendall"] = rel_mann_kendall
+ORACLES["rel_mann_kendall"] = """
+WITH daily AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS x
+  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+pairs AS (SELECT a.event_type,
+    CASE WHEN b.x > a.x THEN 1 WHEN b.x < a.x THEN -1 ELSE 0 END AS sgn
+  FROM daily a JOIN daily b
+    ON a.event_type = b.event_type AND a.day < b.day),
+agg AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_pairs,
+    CAST(sum(sgn) AS BIGINT) AS s_stat
+  FROM pairs GROUP BY 1),
+days AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days
+  FROM daily GROUP BY 1)
+SELECT event_type, n_days, n_pairs, s_stat,
+  CAST(n_days * (n_days - 1) * (2 * n_days + 5) AS BIGINT) AS var18,
+  CAST((CASE WHEN s_stat < 0 THEN -1 ELSE 1 END)
+       * (abs(s_stat) * 1000000 // n_pairs) AS BIGINT) AS trend_ppm
+FROM agg JOIN days USING (event_type)
+"""
+
+
+# ------------------------------------------------------------------
 # r9: average precision (PR-AUC)
 # ------------------------------------------------------------------
 

@@ -2834,7 +2834,7 @@ PREF_MARGIN_PPM = 50_000  # min reward gap (5%) for a usable pair
 
 def _pref_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared candidate-pool stage for the RLHF data-prep audits
-    (ns_preference_pairs here; ns_rejection_sample in pending_r12):
+    (ns_preference_pairs and ns_rejection_sample, both below):
     one row per candidate completion with its synthetic prompt key,
     integer-ppm reward proxy, and regex token count.  Extracted so
     the reward definition lives in exactly one place per engine —
@@ -3012,4 +3012,119 @@ SELECT chosen_source AS source,
   CAST(sum(CASE WHEN usable = 1 THEN c_toks - r_toks ELSE 0 END)
        AS BIGINT) AS sum_len_delta
 FROM usable GROUP BY 1
+"""
+
+
+# ------------------------------------------------------------------
+# ns_rejection_sample — best-of-N rollout selection audit (RLHF)
+# ------------------------------------------------------------------
+
+REJ_THRESHOLD_PPM = 100_000  # min best-of-pool reward to accept a prompt
+
+
+def ns_rejection_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Best-of-N rejection-sampling audit — the other half of the
+    RLHF data-prep story next to ns_preference_pairs: instead of
+    pairing argmax/argmin, each prompt's pool keeps ONLY its best
+    completion, and the whole prompt is rejected when even the best
+    clears no quality bar (``REJ_THRESHOLD_PPM``).  Per source of the
+    winning completion: prompts seen, prompts accepted, acceptance
+    rate (ppm), tokens actually kept for training, mean accepted
+    reward, and the mean best-vs-pool-mean advantage (how much
+    selection is lifting quality over sampling).
+
+    Determinism: reward is the BIGINT stopword-density ppm shared
+    with ns_preference_pairs; the best row_number carries the unique
+    doc_id tie-break (rule 5); pool means floor-divide positive
+    BIGINTs (portable); the only nullable division guards on
+    sum(accepted) via nullif (rule 8).
+
+    Scale: one corpus scan; the window and the prompt groupBy share
+    hashpartitioning(prompt_id) (pools are <= PREF_POOL rows, no
+    skew); the per-source rollup is a |sources|-sized second
+    exchange.  Same plan at 100 TB.  The reward stage is shared
+    VERBATIM with ns_preference_pairs (_pref_candidates /
+    _PREF_PER_CTE) — one definition per engine, no drift."""
+    per = _pref_candidates(spark, sf_dir)
+    w_best = Window.partitionBy("prompt_id").orderBy(
+        F.col("reward_ppm").desc(), F.col("doc_id").asc()
+    )
+    ranked = per.select("*", F.row_number().over(w_best).alias("rn_best"))
+    pools = (
+        ranked.groupBy("prompt_id")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_cand"),
+            F.sum("reward_ppm").cast("long").alias("pool_reward"),
+            F.max(F.when(F.col("rn_best") == 1, F.col("source"))).alias(
+                "best_source"
+            ),
+            F.max(F.when(F.col("rn_best") == 1, F.col("reward_ppm"))).alias(
+                "best_reward"
+            ),
+            F.max(F.when(F.col("rn_best") == 1, F.col("re_tokens"))).alias(
+                "best_toks"
+            ),
+        )
+        .select(
+            "*",
+            F.when(F.col("best_reward") >= REJ_THRESHOLD_PPM, 1)
+            .otherwise(0)
+            .cast("long")
+            .alias("accepted"),
+            # best >= floor(pool mean), so the advantage is >= 0 and
+            # the floor-div is the portable positive case.
+            (
+                F.col("best_reward") - F.expr("pool_reward div n_cand")
+            ).alias("advantage_ppm"),
+        )
+    )
+    return pools.groupBy(F.col("best_source").alias("source")).agg(
+        F.count(F.lit(1)).cast("long").alias("n_prompts"),
+        F.sum("accepted").cast("long").alias("n_accepted"),
+        F.expr(
+            "CAST(sum(accepted) * 1000000 div count(*) AS BIGINT)"
+        ).alias("acceptance_ppm"),
+        F.sum(
+            F.when(F.col("accepted") == 1, F.col("best_toks")).otherwise(0)
+        )
+        .cast("long")
+        .alias("kept_tokens"),
+        F.expr(
+            "CAST(sum(CASE WHEN accepted = 1 THEN best_reward ELSE 0 END)"
+            " div nullif(sum(accepted), 0) AS BIGINT)"
+        ).alias("mean_accepted_reward_ppm"),
+        F.expr(
+            "CAST(sum(advantage_ppm) div count(*) AS BIGINT)"
+        ).alias("mean_advantage_ppm"),
+    )
+
+
+QUERIES["ns_rejection_sample"] = ns_rejection_sample
+ORACLES["ns_rejection_sample"] = rf"""
+WITH {_PREF_PER_CTE},
+ranked AS (SELECT *,
+    row_number() OVER (PARTITION BY prompt_id
+                       ORDER BY reward_ppm DESC, doc_id ASC) AS rn_best
+  FROM per),
+pools AS (SELECT prompt_id, CAST(count(*) AS BIGINT) AS n_cand,
+    CAST(sum(reward_ppm) AS BIGINT) AS pool_reward,
+    max(CASE WHEN rn_best = 1 THEN source END) AS best_source,
+    max(CASE WHEN rn_best = 1 THEN reward_ppm END) AS best_reward,
+    max(CASE WHEN rn_best = 1 THEN re_tokens END) AS best_toks
+  FROM ranked GROUP BY 1),
+flagged AS (SELECT *,
+    CASE WHEN best_reward >= {REJ_THRESHOLD_PPM} THEN 1 ELSE 0 END
+      AS accepted,
+    best_reward - pool_reward // n_cand AS advantage_ppm
+  FROM pools)
+SELECT best_source AS source,
+  CAST(count(*) AS BIGINT) AS n_prompts,
+  CAST(sum(accepted) AS BIGINT) AS n_accepted,
+  CAST(sum(accepted) * 1000000 // count(*) AS BIGINT) AS acceptance_ppm,
+  CAST(sum(CASE WHEN accepted = 1 THEN best_toks ELSE 0 END) AS BIGINT)
+    AS kept_tokens,
+  CAST(sum(CASE WHEN accepted = 1 THEN best_reward ELSE 0 END)
+       // nullif(sum(accepted), 0) AS BIGINT) AS mean_accepted_reward_ppm,
+  CAST(sum(advantage_ppm) // count(*) AS BIGINT) AS mean_advantage_ppm
+FROM flagged GROUP BY 1
 """

@@ -799,3 +799,89 @@ def _dtw_oracle() -> str:
 
 QUERIES["udf_dtw_profile"] = udf_dtw_profile
 ORACLES["udf_dtw_profile"] = _dtw_oracle()
+
+
+# ------------------------------------------------------------------
+# udf_token_spans — token-span manifest via an arrow-optimized Python UDTF
+# ------------------------------------------------------------------
+
+# Bounded slice: the compare stays ~10% of the corpus at any SF (the
+# dedup_lsh_recall_eval idiom — the restriction commutes with the
+# per-document span generation).
+UDTF_DOC_MOD = 10
+UDTF_DOC_REM = 3
+
+
+def udf_token_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token-span manifest via a Spark 4 **arrow-optimized Python
+    UDTF** (``@udtf(useArrow=True)`` + SQL ``LATERAL`` join) — the
+    per-row one-to-many Python extension point: one input document,
+    N output span rows, without an intermediate array column or an
+    explode.  The span semantics themselves are deliberately
+    SQL-expressible (split into single-space-separated token spans,
+    emit per-token index / start offset / length — the byte-offset
+    manifest a span-annotation or highlight pipeline ships) so the
+    DuckDB oracle can hash-check the lane: ~60 output rows per input
+    row exercises real one-to-many fan-out across Arrow batch
+    boundaries, and
+    a UDTF that dropped a row, reordered eval calls, or mangled Arrow
+    batch boundaries breaks the hash.
+
+    Scale: the UDTF is a NARROW per-row stage — no shuffle; input
+    sized by ``size_aware_parallelism`` (Arrow worker round-trips are
+    the fixed cost, ns_text_subword lesson).  The plan must show
+    ``ArrowEvalPythonUDTF`` (the Arrow lane), never
+    ``BatchEvalPythonUDTF`` (row-pickling) — plan-locked in
+    tests/test_plans.py.  Registration (``spark.udtf.register``
+    + temp view) is idempotent per session, driver's vanilla session
+    included."""
+    from pyspark.sql.functions import udtf
+
+    @udtf(
+        returnType="seg_idx: bigint, seg_start: bigint, seg_len: bigint",
+        useArrow=True,
+    )
+    class _SegSpans:
+        def eval(self, text):  # noqa: ANN001 — UDTF protocol signature
+            if text is None:
+                return
+            off = 0
+            for i, part in enumerate(text.split(' ')):
+                yield (i, off, len(part))
+                off += len(part) + 1
+
+    spark.udtf.register("dta_seg_spans", _SegSpans)
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(
+            (F.col("doc_id") % UDTF_DOC_MOD == UDTF_DOC_REM)
+            & F.col("text").isNotNull()
+        )
+        .select("doc_id", "text")
+        .repartition(size_aware_parallelism(spark, sf_dir, "documents"))
+    )
+    docs.createOrReplaceTempView("dta_seg_docs")
+    return spark.sql(
+        "SELECT d.doc_id, s.seg_idx, s.seg_start, s.seg_len"
+        " FROM dta_seg_docs d, LATERAL dta_seg_spans(d.text) s"
+    )
+
+
+QUERIES["udf_token_spans"] = udf_token_spans
+ORACLES["udf_token_spans"] = f"""
+WITH d AS (SELECT doc_id, string_split(text, ' ') AS parts
+  FROM documents
+  WHERE doc_id % {UDTF_DOC_MOD} = {UDTF_DOC_REM} AND text IS NOT NULL),
+z AS (SELECT doc_id,
+    unnest(range(len(parts))) AS seg_idx,
+    unnest(parts) AS seg
+  FROM d),
+m AS (SELECT doc_id, CAST(seg_idx AS BIGINT) AS seg_idx,
+    CAST(length(seg) AS BIGINT) AS seg_len FROM z)
+SELECT doc_id, seg_idx,
+  CAST(coalesce(sum(seg_len + 1) OVER (PARTITION BY doc_id
+    ORDER BY seg_idx ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+    0) AS BIGINT) AS seg_start,
+  seg_len
+FROM m
+"""

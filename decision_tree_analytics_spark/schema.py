@@ -6,7 +6,6 @@ contracts are inferred from call sites and exact test assertions
 (SURVEY.md §2.2).  This module re-implements them over Spark
 ``StructType``:
 
-* ``validate_config_parameters``  (SparkMLTrainer.java:88-92)
 * ``validate_label_field_for_trainer``
 * ``get_feature_list``            (SparkMLTrainer.java:114-116)
 * ``get_categorical_feature_info`` (DecisionTreeTrainer.java:53-55)
@@ -116,19 +115,6 @@ def get_feature_list(
                 f"of type {cdap_type_name(dt)} for field {f}."
             )
     return {name: i for i, name in enumerate(selected)}
-
-
-def validate_config_parameters(
-    schema: StructType,
-    features_to_include: str | None,
-    features_to_exclude: str | None,
-    label_or_prediction_field: str,
-) -> None:
-    """Configure-time validation (reference O2) — feature resolution
-    performs every check as a side effect."""
-    get_feature_list(
-        schema, features_to_include, features_to_exclude, label_or_prediction_field
-    )
 
 
 def get_categorical_feature_info(

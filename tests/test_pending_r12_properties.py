@@ -1,8 +1,8 @@
-"""Property-based tests (hypothesis) for the round-12 operators'
-integer formulas — pure-Python replicas of the exact expression trees
-both engines run, checked over arbitrary inputs.  The Spark-vs-oracle
-equality lives in tests/test_oracle_queries.py (registered five) and
-tests/test_pending_r12.py (r14 holds); these lock the FORMULAS
+"""Property-based tests (hypothesis) for the integer formulas of
+snap_vacuum_plan, rel_mann_kendall and ml_quantile_reg — pure-Python
+replicas of the exact expression trees both engines run, checked over
+arbitrary inputs.  The Spark-vs-oracle equality lives in
+tests/test_oracle_queries.py; these lock the FORMULAS
 (vacuum retention accounting, Mann-Kendall statistic bounds, pinball
 argmin) against future refactors and against inputs the fixture
 never produces (all-tie series, single-generation files, negative
@@ -13,11 +13,8 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from decision_tree_analytics_spark.operators.pending_r12 import (
-    QREG_COMBOS,
-    VACUUM_GENS,
-    VACUUM_KEEP,
-)
+from decision_tree_analytics_spark.operators.cdc import VACUUM_GENS, VACUUM_KEEP
+from decision_tree_analytics_spark.operators.stats_ext import QREG_COMBOS
 
 
 # ---- snap_vacuum_plan accounting -------------------------------------

@@ -7,16 +7,25 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from decision_tree_analytics_spark.operators.pending_r12 import (
-    QUERIES,
-    REJ_THRESHOLD_PPM,
+from decision_tree_analytics_spark.operators.cdc import (
     VACUUM_GENS,
     VACUUM_KEEP,
+    snap_vacuum_plan,
+)
+from decision_tree_analytics_spark.operators.stats_ext import (
+    QREG_COMBOS,
+    ml_quantile_reg,
+    rel_did,
+    rel_mann_kendall,
+)
+from decision_tree_analytics_spark.operators.text import (
+    REJ_THRESHOLD_PPM,
+    ns_rejection_sample,
 )
 
 
 def test_rejection_sample_invariants(spark, sf_dir):
-    pdf = QUERIES["ns_rejection_sample"](spark, sf_dir).toPandas()
+    pdf = ns_rejection_sample(spark, sf_dir).toPandas()
     assert len(pdf) > 0
     assert (pdf.n_accepted <= pdf.n_prompts).all()
     assert (pdf.acceptance_ppm <= 1_000_000).all()
@@ -30,7 +39,7 @@ def test_rejection_sample_invariants(spark, sf_dir):
 
 def test_vacuum_plan_invariants(spark, sf_dir):
     pdf = (
-        QUERIES["snap_vacuum_plan"](spark, sf_dir)
+        snap_vacuum_plan(spark, sf_dir)
         .toPandas()
         .sort_values("gen")
         .reset_index(drop=True)
@@ -71,12 +80,9 @@ def test_quantile_reg_is_grid_argmin(spark, sf_dir):
     recomputed independently in pandas from the raw rows."""
     import math
 
-    from decision_tree_analytics_spark.operators.pending_r12 import (
-        QREG_COMBOS,
-    )
     from decision_tree_analytics_spark.sources.tables import load_table
 
-    got = QUERIES["ml_quantile_reg"](spark, sf_dir).toPandas()
+    got = ml_quantile_reg(spark, sf_dir).toPandas()
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
@@ -108,7 +114,7 @@ def test_mann_kendall_matches_replay(spark, sf_dir):
     from decision_tree_analytics_spark.sources.tables import load_table
 
     got = (
-        QUERIES["rel_mann_kendall"](spark, sf_dir)
+        rel_mann_kendall(spark, sf_dir)
         .toPandas()
         .set_index("event_type")
         .sort_index()
@@ -143,7 +149,7 @@ def test_did_matches_pandas_replay(spark, sf_dir):
     from decision_tree_analytics_spark.sources.tables import load_table
 
     got = (
-        QUERIES["rel_did"](spark, sf_dir)
+        rel_did(spark, sf_dir)
         .toPandas()
         .set_index("event_type")
         .sort_index()

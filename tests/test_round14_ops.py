@@ -12,11 +12,11 @@ import os
 
 import pyspark.sql.functions as F
 
-from decision_tree_analytics_spark.operators.pending_r12 import (
+from decision_tree_analytics_spark.operators.multimodal import (
     VIDEO_HEADER_BYTES,
     mm_video_frame_plan,
 )
-from decision_tree_analytics_spark.operators.pending_r14 import (
+from decision_tree_analytics_spark.operators.udf_inventory import (
     UDTF_DOC_MOD,
     UDTF_DOC_REM,
     udf_token_spans,
@@ -103,16 +103,11 @@ os.environ["PYSPARK_DRIVER_PYTHON"] = sys.executable
 os.environ["PYTHONPATH"] = {repo!r} + os.pathsep + os.environ.get("PYTHONPATH", "")
 from pyspark.sql import SparkSession
 from tests.oracle_harness import compare, duckdb_connection
-from decision_tree_analytics_spark.operators.pending_r12 import (
-    QUERIES as Q12, ORACLES as O12,
-)
-from decision_tree_analytics_spark.operators.pending_r14 import (
-    QUERIES as Q14, ORACLES as O14,
-)
+from decision_tree_analytics_spark.operators import all_oracles, all_queries
 
 NAMES = ["udf_token_spans", "mm_video_frame_plan"]
-QS = {{**Q12, **Q14}}
-OS = {{**O12, **O14}}
+QS = all_queries()
+OS = all_oracles()
 
 spark = (
     SparkSession.builder.master("local-cluster[2,4,2048]")
