@@ -3,18 +3,27 @@
 Reference semantics (SURVEY §1.4, SparkMLTrainer.java:129-146 /
 SparkMLPredictor.java:140-154): a null feature is omitted from the
 sparse vector while still occupying its slot — observationally
-null ≡ 0.0.  ``VectorAssembler(handleInvalid=...)`` cannot express
-this (skip drops the row, error fails, keep yields NaN), so every
-feature is wrapped in ``coalesce(cast(c AS double), 0.0)`` *before*
-assembly — a pure Catalyst projection, fully codegen'd.
+null ≡ 0.0.
 
-Categorical features are declared by attaching ML nominal-attribute
-metadata to the assembled vector column — the DataFrame-native
-equivalent of mllib's ``categoricalFeaturesInfo`` map
-(DecisionTreeTrainer.java:53-55).  ``pyspark.ml``'s tree reads arity
-from this metadata and (like the reference, which expects the run to
-FAIL on understated cardinality, DecisionTreeRegressionTest.java:237-275)
-rejects out-of-range category values at fit time.
+The vector is built by one projection, in vector-index order::
+
+    array_to_vector(array(coalesce(cast(f0 AS DOUBLE), 0.0D), ...))
+
+so Catalyst analyses one expression per call, however many features
+there are, and the driver sends a handful of py4j calls.  The result
+is always a *dense* vector; the tree reads each slot by index, so a
+dense and a sparse vector with the same values train the same tree
+and score the same prediction (tests/test_ml_pipeline.py compares
+against a ``VectorAssembler`` reference).
+
+Every vector column carries ML attribute-group metadata: a numeric
+attribute per slot and, for categorical features, a nominal one with
+its arity — the DataFrame-native equivalent of mllib's
+``categoricalFeaturesInfo`` map (DecisionTreeTrainer.java:53-55).
+``pyspark.ml``'s tree reads arity from this metadata and (like the
+reference, which expects the run to FAIL on understated cardinality,
+DecisionTreeRegressionTest.java:237-275) rejects out-of-range category
+values at fit time.
 
 Scale: assembly is a narrow map — no shuffle; at 100 TB it pipelines
 into whatever the downstream estimator/scorer needs.
@@ -23,7 +32,7 @@ into whatever the downstream estimator/scorer needs.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.ml.feature import VectorAssembler
+from pyspark.ml.functions import array_to_vector
 from pyspark.sql import DataFrame
 
 FEATURES_COL = "__features__"
@@ -51,30 +60,22 @@ def _attrs_metadata(
     return {"ml_attr": {"attrs": attrs, "num_attrs": len(feature_list)}}
 
 
+def _null_as_zero(name: str) -> str:
+    quoted = "`" + name.replace("`", "``") + "`"
+    return f"coalesce(cast({quoted} AS DOUBLE), 0.0D)"
+
+
 def assemble_features(
     df: DataFrame,
     feature_list: dict[str, int],
     categorical_info: dict[int, int] | None = None,
     output_col: str = FEATURES_COL,
 ) -> DataFrame:
-    """Append a vector column assembled from ``feature_list`` (in
+    """Append a dense vector column assembled from ``feature_list`` (in
     vector-index order) with null ≡ 0.0 semantics."""
-    categorical_info = categorical_info or {}
     ordered = [n for n, _ in sorted(feature_list.items(), key=lambda kv: kv[1])]
-
-    tmp_cols = [f"__f_{n}" for n in ordered]
-    prepared = df
-    for name, tmp in zip(ordered, tmp_cols):
-        prepared = prepared.withColumn(
-            tmp, F.coalesce(F.col(name).cast("double"), F.lit(0.0))
-        )
-
-    assembler = VectorAssembler(inputCols=tmp_cols, outputCol=output_col)
-    assembled = assembler.transform(prepared).drop(*tmp_cols)
-
-    if categorical_info:
-        meta = _attrs_metadata(feature_list, categorical_info)
-        assembled = assembled.withColumn(
-            output_col, F.col(output_col).alias(output_col, metadata=meta)
-        )
-    return assembled
+    slots = F.expr(f"array({', '.join(_null_as_zero(n) for n in ordered)})")
+    meta = _attrs_metadata(feature_list, categorical_info or {})
+    return df.withColumn(
+        output_col, array_to_vector(slots).alias(output_col, metadata=meta)
+    )

@@ -18,9 +18,14 @@ somehow re-executed afterwards the plan simply recomputes.
 
 from __future__ import annotations
 
+import logging
 import weakref
 
 from pyspark.sql import DataFrame
+
+from decision_tree_analytics_spark.errors import warn_once
+
+logger = logging.getLogger(__name__)
 
 
 def tether_cache(result: DataFrame, *cached: DataFrame) -> DataFrame:
@@ -32,8 +37,10 @@ def tether_cache(result: DataFrame, *cached: DataFrame) -> DataFrame:
         for j in jdfs:
             try:
                 j.unpersist(False)
-            except Exception:
-                pass  # session already stopped — nothing to free
+            except Exception as e:
+                # Usually the session has already stopped, so there is
+                # nothing left to free; reported once per error type.
+                warn_once(logger, type(e).__name__, "could not unpersist a tethered cache: %r", e)
 
     weakref.finalize(result, _release)
     return result

@@ -20,9 +20,14 @@ then overridden downward for local test runs.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+from decision_tree_analytics_spark.errors import warn_once
+
+logger = logging.getLogger(__name__)
 
 # Runtime-settable confs applied to *any* session we are handed (the
 # driver creates its own session for verify/bench runs).
@@ -50,19 +55,23 @@ _RUNTIME_CONFS = {
 }
 
 
+def _set_confs(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
+    for k, v in confs.items():
+        try:
+            spark.conf.set(k, v)
+        except Exception as e:
+            # A conf may be static on some builds; never fail a query
+            # over a tuning knob, but say so once per conf.
+            warn_once(logger, k, "could not set %s=%s: %s", k, v, e)
+    return spark
+
+
 def prepare_session(spark: SparkSession) -> SparkSession:
     """Idempotently apply the engine's runtime confs to a session.
 
     Safe to call per-query: every conf here is runtime-settable.
     """
-    for k, v in _RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            # A conf may be static on some builds; never fail a query
-            # over a tuning knob.
-            pass
-    return spark
+    return _set_confs(spark, _RUNTIME_CONFS)
 
 
 def enable_runtime_bloom_filters(
@@ -87,12 +96,11 @@ def enable_runtime_bloom_filters(
             creation_side_max
         ),
     }
-    for k, v in confs.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass
-    return spark
+    return _set_confs(spark, confs)
+
+
+def _physical_memory_mb() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
 
 
 def get_spark(
@@ -102,11 +110,16 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    Local mode uses ``local[$SPARK_GRAFT_CPUS]`` (default 32).  On a
-    real cluster the same builder is used with ``master`` unset so
-    spark-submit's cluster manager wins.
+    Local mode uses ``local[$SPARK_GRAFT_CPUS]``, by default the CPUs
+    this process may run on, and a driver of
+    ``$SPARK_GRAFT_DRIVER_MEM``, by default half the physical memory
+    (in local mode the driver JVM is also the executor; the other half
+    is left to Python workers and the OS).  On a real cluster the same
+    builder is used with ``master`` unset so spark-submit's cluster
+    manager wins.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{_physical_memory_mb() // 2}m"
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -117,7 +130,7 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         # Broadcast threshold: bounded dims (region/nation) always fit;
         # AQE upgrades joins whose runtime size turns out small.
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")

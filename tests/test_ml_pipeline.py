@@ -8,6 +8,7 @@ import pyspark.sql.functions as F
 import pytest
 from pyspark.sql.types import DoubleType
 
+from decision_tree_analytics_spark import schema as S
 from decision_tree_analytics_spark.config import PredictorConfig, TrainerConfig
 from decision_tree_analytics_spark.errors import ModelNotFoundError
 from decision_tree_analytics_spark.ml import (
@@ -15,6 +16,7 @@ from decision_tree_analytics_spark.ml import (
     DecisionTreeTrainerStage,
     assemble_features,
 )
+from decision_tree_analytics_spark.ml.features import FEATURES_COL, _attrs_metadata
 from tests.fixtures import flights
 
 
@@ -95,6 +97,66 @@ def test_null_feature_is_zero(spark):
     for (v,) in vecs:
         assert v[1] == 0.0
         assert v.size == 3
+
+
+def _vector_assembler_reference(df, feature_list, categorical_info):
+    """Reference assembly: null-as-zero columns fed to ``VectorAssembler``,
+    nominal metadata attached afterwards."""
+    from pyspark.ml.feature import VectorAssembler
+
+    ordered = sorted(feature_list, key=feature_list.get)
+    tmp = [f"__ref_{n}" for n in ordered]
+    prepared = df.select(
+        "*",
+        *[F.coalesce(F.col(n).cast("double"), F.lit(0.0)).alias(t) for n, t in zip(ordered, tmp)],
+    )
+    out = VectorAssembler(inputCols=tmp, outputCol=FEATURES_COL).transform(prepared).drop(*tmp)
+    if categorical_info:
+        meta = _attrs_metadata(feature_list, categorical_info)
+        out = out.withColumn(FEATURES_COL, F.col(FEATURES_COL).alias(FEATURES_COL, metadata=meta))
+    return out
+
+
+def test_assembly_matches_vector_assembler_reference(spark):
+    cfg = TrainerConfig(
+        file_set_name="unused",
+        feature_fields_to_include=flights.TRAINER_FEATURES,
+        cardinality_mapping="dofW:7",
+        label_field="delayed",
+    )
+    train = flights.flight_train_df(spark).withColumn(
+        # Nulls on some rows, so the null-as-zero slot is exercised.
+        "elapsedTime", F.when(F.col("dofM") % 5 == 0, None).otherwise(F.col("elapsedTime"))
+    )
+    feature_list = cfg.validate(train.schema)
+    categorical = S.get_categorical_feature_info(feature_list, cfg.cardinality_mapping)
+
+    def fit(assembled):
+        from pyspark.ml.regression import DecisionTreeRegressor
+
+        return DecisionTreeRegressor(
+            featuresCol=FEATURES_COL,
+            labelCol="delayed",
+            impurity="variance",
+            maxDepth=9,
+            maxBins=100,
+            seed=12345,
+        ).fit(assembled)
+
+    ours = assemble_features(train, feature_list, categorical)
+    reference = _vector_assembler_reference(train, feature_list, categorical)
+    assert [r[FEATURES_COL].toArray().tolist() for r in ours.collect()] == [
+        r[FEATURES_COL].toArray().tolist() for r in reference.collect()
+    ]
+    # Line 0 of the debug string carries the model uid.
+    assert (
+        fit(ours).toDebugString.splitlines()[1:]
+        == fit(reference).toDebugString.splitlines()[1:]
+    )
+
+    for cats in (categorical, {}):
+        meta = assemble_features(train, feature_list, cats).schema[FEATURES_COL].metadata
+        assert meta["ml_attr"]["num_attrs"] == len(feature_list)
 
 
 def test_empty_input_guards(spark, model_dir, trained):
